@@ -1,9 +1,11 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.StructType
 
 import graft.pipeline.{BankEtl, BatchScheduler, RunLog}
-import graft.sources.FileTracker
+import graft.sources.{CsvStaging, FileTracker}
 
 /** CLI entrypoint — the reference's `main.py` controller: run the bank
   * ETL over a CSV directory into parquet production tables, with
@@ -30,6 +32,13 @@ import graft.sources.FileTracker
   * a staged batch, loading under a different window. Re-running against
   * an unchanged CSV dir extracts nothing (incremental semantics),
   * exactly like the reference's re-run behavior.
+  *
+  * One scan per run and entity: the tracker hashes the entity's files
+  * once and returns the pending ones; only those are read, once, and
+  * hashed nowhere else. A batch — `_staging/<entity>` and the logged
+  * `csv_rows`/`invalid_pk`/`deduped` stats — is the run's NEW files,
+  * not the whole glob; the stats are observed metrics of the action
+  * that writes the batch (no count jobs of their own).
   */
 object EtlMain {
 
@@ -88,34 +97,85 @@ object EtlMain {
     neu.toString
   }
 
-  /** Extract phase: stage new CSV files (raw strings, PK-filtered,
-    * deduped) into the staging layer and mark them processed. The
-    * reference's extract.py → MySQL-staging leg.
+  /** Extract phase: stage the pending CSV files (raw strings,
+    * PK-filtered, deduped) into the staging layer and mark them
+    * processed. The reference's extract.py → MySQL-staging leg.
+    * `_staging/<entity>` holds this run's batch of new files plus any
+    * staged rows no load has taken yet; the logged stats cover the
+    * new files only.
     */
   def runExtract(spark: SparkSession, csvDir: String, outDir: String,
                  log: Option[RunLog] = None): Unit = {
     val rl = openLog(outDir, log)
     val tracker = new FileTracker(spark, trackerPath(spark, outDir))
     BankEtl.schemas.foreach { entity =>
-      val glob = s"$csvDir/${entity.name}*.csv"
-      val pending = tracker.newFiles(glob)
+      val pending = tracker.newFiles(s"$csvDir/${entity.name}*.csv")
       if (pending.isEmpty) {
         rl.log("extract", entity.name, "skip", "reason" -> "no new files")
       } else {
         rl.timed[Long]("extract", entity.name, n => Seq(
           "rows_out" -> n)) {
-          val staged = BankEtl.extract(spark, glob, entity)
-          sources.ParquetIo.replace(staged.data, staging(outDir, entity.name))
+          val staged = stage(spark, pending, entity)
+          sources.ParquetIo.replace(withUnloaded(spark, outDir, entity, staged.data),
+            staging(outDir, entity.name))
           tracker.markProcessed(pending, staged.perFileRows)
-          rl.log("extract", entity.name, "stats",
-            "csv_rows" -> staged.totalRows,
-            "invalid_pk" -> staged.invalidKeyRows,
-            "deduped" -> staged.dedupedRows)
+          logStats(rl, "extract", entity, staged)
           staged.totalRows - staged.invalidKeyRows - staged.dedupedRows
         }
       }
     }
   }
+
+  /** Stage exactly the pending files: a file already processed holds
+    * no valid key that is not in production, so re-reading it could
+    * only add keys the incremental load drops (the reference's
+    * extract.py skip of tracked files).
+    */
+  private def stage(spark: SparkSession, pending: Seq[FileTracker.Pending],
+                    entity: BankEtl.EntitySchema): CsvStaging.StagingResult =
+    CsvStaging.readFiles(spark, pending.map(_.path), entity.columns,
+      entity.primaryKey)
+
+  /** `batch` plus the rows of the previous staged batch whose keys are
+    * not in production yet (its files are already marked processed, so
+    * replacing it before a load took it would lose them); on a key in
+    * both, the new batch wins. After a full extract → transform → load
+    * cycle nothing is carried.
+    */
+  private def withUnloaded(spark: SparkSession, outDir: String,
+                           entity: BankEtl.EntitySchema,
+                           batch: DataFrame): DataFrame = {
+    val pk = entity.primaryKey
+    sources.ParquetIo.readIfExists(spark, staging(outDir, entity.name),
+        Some(batch.schema)) match {
+      case None => batch
+      case Some(previous) =>
+        val unloaded = productionKeys(spark, outDir, entity, batch)
+          .fold(previous)(BankEtl.loadIncremental(previous, _, pk))
+        operators.Loads.upsert(unloaded.withColumn("__v", lit(0)),
+          batch.withColumn("__v", lit(1)), Seq(pk), "__v").drop("__v")
+    }
+  }
+
+  /** The production table's keys, read with the key's known type (no
+    * schema-inference job); None before the first load.
+    */
+  private def productionKeys(spark: SparkSession, outDir: String,
+                             entity: BankEtl.EntitySchema,
+                             batch: DataFrame): Option[DataFrame] =
+    sources.ParquetIo.readIfExists(spark, s"$outDir/${entity.name}",
+      Some(StructType(Seq(batch.schema(entity.primaryKey)))))
+      .map(_.select(entity.primaryKey))
+
+  /** The batch's staging counts — observed metrics, so only after the
+    * action that consumed the staged data.
+    */
+  private def logStats(rl: RunLog, phase: String, entity: BankEtl.EntitySchema,
+                       staged: CsvStaging.StagingResult): Unit =
+    rl.log(phase, entity.name, "stats",
+      "csv_rows" -> staged.totalRows,
+      "invalid_pk" -> staged.invalidKeyRows,
+      "deduped" -> staged.dedupedRows)
 
   /** Transform phase: staged batch → typed/cleaned batch. The
     * reference's transform.py leg.
@@ -162,11 +222,9 @@ object EtlMain {
                              outDir: String,
                              entity: BankEtl.EntitySchema): Long = {
     val target = s"$outDir/${entity.name}"
-    val existing = sources.ParquetIo.readIfExists(spark, target)
-      .map(_.select(entity.primaryKey))
-      .getOrElse(transformedBatch.limit(0).select(entity.primaryKey))
-    val newRows = BankEtl.loadIncremental(transformedBatch, existing,
-      entity.primaryKey)
+    val newRows = productionKeys(spark, outDir, entity, transformedBatch)
+      .fold(transformedBatch)(BankEtl.loadIncremental(transformedBatch, _,
+        entity.primaryKey))
     val loaded = newRows.cache().count()
     // production tables are directory-partitioned on their analysis
     // dimension so downstream predicates prune (see Writers)
@@ -195,21 +253,17 @@ object EtlMain {
     val rl = openLog(outDir, log)
     val tracker = new FileTracker(spark, trackerPath(spark, outDir))
     BankEtl.schemas.foreach { entity =>
-      val glob = s"$csvDir/${entity.name}*.csv"
-      val pending = tracker.newFiles(glob)
+      val pending = tracker.newFiles(s"$csvDir/${entity.name}*.csv")
       if (pending.isEmpty) {
         rl.log("full", entity.name, "skip", "reason" -> "no new files")
       } else {
         rl.timed[Long]("full", entity.name, n => Seq("rows_out" -> n)) {
-          val staged = BankEtl.extract(spark, glob, entity)
+          val staged = stage(spark, pending, entity)
           val out = BankEtl.transform(entity.name, staged.data, batchDate)
           val loaded = loadProduction(spark, out, outDir, entity)
-          // per-FILE raw counts (not the glob total against every file)
+          // per-FILE raw counts (not the batch total against every file)
           tracker.markProcessed(pending, staged.perFileRows)
-          rl.log("full", entity.name, "stats",
-            "csv_rows" -> staged.totalRows,
-            "invalid_pk" -> staged.invalidKeyRows,
-            "deduped" -> staged.dedupedRows)
+          logStats(rl, "full", entity, staged)
           loaded
         }
       }

@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Processed-file tracking — the reference's `etl_file_tracker` table
   * (src/extract.py:115-270): a file is skipped when its (name, content
@@ -11,31 +12,45 @@ import org.apache.spark.sql.functions._
   * Scale design: hashes are computed DISTRIBUTED via the `binaryFile`
   * source (`md5(content)` per file on executors), not by streaming
   * bytes through the driver as the reference does (extract.py:210).
-  * The state itself is a small parquet table; the "which files are
-  * new" question is an anti-join on (file_name, file_hash).
+  * Each [[newFiles]] call is ONE hashing job; the pending files come
+  * back to the driver as (name, hash, path) rows — O(#files) — and
+  * [[markProcessed]] records exactly those hashes, never re-listing or
+  * re-hashing. A file rewritten after it was listed therefore keeps
+  * its old hash in the state and surfaces again on the next run,
+  * instead of being marked with content that was never read.
+  *
+  * The state itself is a small parquet table (O(#files)), read once
+  * per tracker with its fixed schema (no inference job) and merged on
+  * the driver; each [[markProcessed]] rewrites it through ParquetIo's
+  * rename swap.
   */
 class FileTracker(spark: SparkSession, statePath: String) {
+  import FileTracker._
 
-  private val stateSchema = "file_name STRING, file_hash STRING, " +
-    "record_count LONG, processed_at TIMESTAMP"
+  private val stateSchema = StructType.fromDDL("file_name STRING, " +
+    "file_hash STRING, record_count LONG, processed_at TIMESTAMP")
 
-  /** Absent state (first run) → empty frame; a read FAILURE on existing
+  private var rows: Seq[Row] = null
+
+  /** Absent state (first run) → empty; a read FAILURE on existing
     * state propagates — swallowing it would make every processed file
     * look new and re-ingest the world.
     */
-  def state(): DataFrame =
-    ParquetIo.readIfExists(spark, statePath)
-      .map(_.select("file_name", "file_hash", "record_count", "processed_at"))
-      .getOrElse(
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(stateSchema)))
+  private def stateRows: Seq[Row] = {
+    if (rows == null)
+      rows = ParquetIo.readIfExists(spark, statePath, Some(stateSchema))
+        .map(_.collect().toSeq).getOrElse(Nil)
+    rows
+  }
 
-  /** (file_name, file_hash, length) for every file under `glob`,
-    * hashed on executors. A glob matching nothing yields an empty frame
-    * (the reference logs-and-continues on missing entity files,
-    * extract.py:530-532).
+  def state(): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(stateRows: _*), stateSchema)
+
+  /** Files under `glob` not yet processed with their current content,
+    * in path order. A glob matching nothing yields none (the reference
+    * logs-and-continues on missing entity files, extract.py:530-532).
     */
-  def listWithHashes(glob: String): DataFrame = {
+  def newFiles(glob: String): Seq[Pending] = {
     // expand the glob up front and hand binaryFile CONCRETE paths: a
     // raw glob goes through FileStreamSink.hasMetadata, which probes
     // the literal glob string as a file and warn-logs a
@@ -44,40 +59,43 @@ class FileTracker(spark: SparkSession, statePath: String) {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val matches = Option(fs.globStatus(p)).getOrElse(
       Array.empty[org.apache.hadoop.fs.FileStatus])
-    if (matches.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "file_name STRING, file_hash STRING, length LONG"))
-    else
+    if (matches.isEmpty) Nil
+    else {
+      val done = stateRows.map(r => (r.getString(0), r.getString(1))).toSet
       spark.read.format("binaryFile")
         .load(matches.map(_.getPath.toString).toIndexedSeq: _*)
-        .select(
-          element_at(split(col("path"), "/"), -1).as("file_name"),
-          md5(col("content")).as("file_hash"),
-          col("length"))
+        .select(element_at(split(col("path"), "/"), -1), md5(col("content")),
+          col("path"))
+        .collect()
+        .map(r => Pending(r.getString(0), r.getString(1), r.getString(2)))
+        .filterNot(f => done((f.fileName, f.fileHash)))
+        .sortBy(_.path).toSeq
+    }
   }
 
-  /** Files under `glob` not yet processed with their current content. */
-  def newFiles(glob: String): DataFrame =
-    listWithHashes(glob)
-      .join(state().select("file_name", "file_hash"),
-        Seq("file_name", "file_hash"), "left_anti")
-
-  /** Record files as processed (upsert by file_name: latest hash wins). */
-  def markProcessed(files: DataFrame, counts: Map[String, Long]): Unit = {
-    val countsDf = files.sparkSession.createDataFrame(
-      counts.toSeq.map { case (f, n) => (f, n) })
-      .toDF("file_name", "record_count")
-    val incoming = files.select("file_name", "file_hash")
-      .join(countsDf, Seq("file_name"), "left")
-      .na.fill(0L, Seq("record_count"))
-      .withColumn("processed_at", current_timestamp())
-    val merged = graft.operators.Loads.upsert(
-      state().withColumn("__v", lit(0)),
-      incoming.withColumn("__v", lit(1)),
-      Seq("file_name"), "__v").drop("__v")
-    // small state table (O(#files), not O(rows)): single-file rewrite
-    // through ParquetIo's rename swap — crash-safe, self-healing
-    ParquetIo.replace(merged, statePath, coalesceTo = 1)
+  /** Record `files` as processed with the hashes they were listed
+    * with (upsert by file_name: latest wins). `counts` are raw rows
+    * per file name; a file without an entry had none.
+    */
+  def markProcessed(files: Seq[Pending], counts: Map[String, Long]): Unit = {
+    val now = new java.sql.Timestamp(System.currentTimeMillis())
+    val names = files.map(_.fileName).toSet
+    val merged = stateRows.filterNot(r => names(r.getString(0))) ++
+      files.map(f => Row(f.fileName, f.fileHash,
+        counts.getOrElse(f.fileName, 0L), now))
+    // single-file rewrite through ParquetIo's rename swap — crash-safe,
+    // self-healing
+    ParquetIo.replace(
+      spark.createDataFrame(java.util.Arrays.asList(merged: _*), stateSchema),
+      statePath, coalesceTo = 1)
+    rows = merged
   }
+}
+
+object FileTracker {
+
+  /** A file whose current content is not yet processed: its name (the
+    * tracker key), the md5 of the content that was listed, and its path.
+    */
+  final case class Pending(fileName: String, fileHash: String, path: String)
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Existence-checked parquet reads and rename-based table swaps.
   *
@@ -32,9 +33,11 @@ object ParquetIo {
   private def tmp(path: String) = new Path(path + "__tmp")
 
   /** Some(df) if `path` exists (after crash recovery), None if absent.
-    * Read failures on an existing path are NOT swallowed.
+    * Read failures on an existing path are NOT swallowed. A known
+    * `schema` skips parquet schema inference (a footer-reading job).
     */
-  def readIfExists(spark: SparkSession, path: String): Option[DataFrame] = {
+  def readIfExists(spark: SparkSession, path: String,
+                   schema: Option[StructType] = None): Option[DataFrame] = {
     val target = new Path(path)
     val filesystem = fs(spark, target)
     // crash recovery: a swap that died between renames left the
@@ -50,7 +53,8 @@ object ParquetIo {
         val n = s.getPath.getName
         !(n.startsWith("_") || n.startsWith("."))
       }
-    if (hasData) Some(spark.read.parquet(path)) else None
+    if (!hasData) None
+    else Some(schema.fold(spark.read)(spark.read.schema).parquet(path))
   }
 
   /** Replace the table at `path` with `df` via write-tmp + rename. */

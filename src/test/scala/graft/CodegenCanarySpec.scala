@@ -21,7 +21,7 @@ import graft.pipeline.BankEtl
   */
 class CodegenCanarySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
-  private val dataDir = "/root/reference/data"
+  private lazy val dataDir = graft.tools.RefFixture.dir
 
   private def strict[T](body: => T): T = {
     spark.conf.set("spark.sql.codegen.fallback", "false")
@@ -35,11 +35,12 @@ class CodegenCanarySpec extends AnyFunSuite {
     strict {
       EtlMain.runFull(spark, dataDir, out, "2026-08-14")
     }
-    // the reference's own logged run: 25 branches / 5022 customers /
-    // 2006 loans (+ transactions when the fixture is present)
+    // all four entities of the committed fixture, staged counts by
+    // construction (tools.RefFixture)
     assert(spark.read.parquet(s"$out/branches").count() == 25L)
-    assert(spark.read.parquet(s"$out/customers").count() == 5022L)
+    assert(spark.read.parquet(s"$out/customers").count() == 1012L)
     assert(spark.read.parquet(s"$out/loans").count() == 2006L)
+    assert(spark.read.parquet(s"$out/transactions").count() == 500L)
   }
 
   test("derived-column filter + no-key aggregate compiles for every " +

@@ -39,7 +39,7 @@ class NativeExprSpec extends AnyFunSuite {
       "0013-03-11", "4-5-26", "4-5-27", "31-13-11", "13-13-11", null)
       .zipWithIndex.map { case (s, i) => (i.toLong, s) }
     val refDates = spark.read.option("header", "true")
-      .csv("/root/reference/data/customers.csv")
+      .csv(s"${graft.tools.RefFixture.dir}/customers.csv")
       .select(monotonically_increasing_id().as("id"),
         $"dob".as("s")).limit(2000)
     val corpus = adversarial.toDF("id", "s").unionByName(refDates)

@@ -24,13 +24,18 @@ class SourcesSpec extends AnyFunSuite {
         |""".stripMargin)
     val res = CsvStaging.read(spark, s"$dir/loans.csv",
       Seq("loan_id", "customer_id", "loan_amount"), "loan_id")
+    // counts are observed metrics: before any action they do not exist
+    // yet, and asking is an error, not a wait
+    val early = intercept[IllegalStateException](res.totalRows)
+    assert(early.getMessage.contains("observed metrics"), early.getMessage)
+    val collected = res.data.collect()
     assert(res.totalRows == 5 && res.invalidKeyRows == 1 && res.dedupedRows == 1)
-    val rows = res.data.collect().map(r =>
+    val rows = collected.map(r =>
       r.getAs[String]("loan_id") -> r.getAs[String]("loan_amount")).toMap
     assert(rows == Map("L1" -> "999", "L2" -> "200", "L3" -> "400")) // keep-last
     assert(res.data.schema.filter(_.name != "numeric_sort_key")
       .forall(_.dataType.typeName == "string")) // raw strings
-    val keys = res.data.collect().map(r =>
+    val keys = collected.map(r =>
       r.getAs[String]("loan_id") -> r.getAs[Long]("numeric_sort_key")).toMap
     assert(keys("L1") == 1L && keys("L3") == 3L)
     // schema mismatch is an error, not silent coercion
@@ -45,10 +50,43 @@ class SourcesSpec extends AnyFunSuite {
       "id,v\nT1,1\nT2,2\n")
     Files.writeString(java.nio.file.Path.of(dir, "tx_2.csv"),
       "id,v\nT3,3\nT4,4\nT5,5\n")
+    Files.writeString(java.nio.file.Path.of(dir, "tx_3 b.csv"), "id,v\nT6,6\n")
     val res = CsvStaging.read(spark, s"$dir/tx_*.csv", Seq("id", "v"), "id")
-    // record_count must be per FILE, not the glob total (ADVICE r1)
-    assert(res.perFileRows == Map("tx_1.csv" -> 2L, "tx_2.csv" -> 3L))
-    assert(res.totalRows == 5)
+    assert(res.data.count() == 6)
+    // record_count must be per FILE, not the glob total (ADVICE r1),
+    // keyed by the plain file name the tracker records
+    assert(res.perFileRows ==
+      Map("tx_1.csv" -> 2L, "tx_2.csv" -> 3L, "tx_3 b.csv" -> 1L))
+    assert(res.totalRows == 6)
+    val tracked = new FileTracker(spark, tmpDir() + "/state")
+      .newFiles(s"$dir/tx_*.csv").map(_.fileName)
+    assert(res.perFileRows.keySet == tracked.toSet)
+  }
+
+  test("CsvStaging: a file whose header reorders the columns is read by " +
+    "its own header, and a later file wins keep-last") {
+    val dir = tmpDir()
+    Files.writeString(java.nio.file.Path.of(dir, "loans.csv"),
+      "loan_id,customer_id,loan_amount\nL1,c1,100\nL2,c2,200\n")
+    Files.writeString(java.nio.file.Path.of(dir, "loans_d2.csv"),
+      "loan_amount,loan_id,customer_id\n300,L3,c3\n999,L1,c1\n")
+    val res = CsvStaging.read(spark, s"$dir/loans*.csv",
+      Seq("loan_id", "customer_id", "loan_amount"), "loan_id")
+    val got = res.data.collect().map(r => r.getAs[String]("loan_id") ->
+      (r.getAs[String]("customer_id"), r.getAs[String]("loan_amount"))).toMap
+    // Spark alone would name d2's columns by loans.csv's header:
+    // loan_id=300, customer_id=L3, loan_amount=c3
+    assert(got == Map("L1" -> ("c1", "999"), "L2" -> ("c2", "200"),
+      "L3" -> ("c3", "300")))
+    assert(res.perFileRows == Map("loans.csv" -> 2L, "loans_d2.csv" -> 2L))
+    assert(res.totalRows == 4 && res.invalidKeyRows == 0 && res.dedupedRows == 1)
+    // a header with the right names but one missing is still refused
+    Files.writeString(java.nio.file.Path.of(dir, "loans_d3.csv"),
+      "loan_amount,loan_id\n1,L9\n")
+    intercept[IllegalArgumentException] {
+      CsvStaging.read(spark, s"$dir/loans*.csv",
+        Seq("loan_id", "customer_id", "loan_amount"), "loan_id")
+    }
   }
 
   test("JsonlSource: good rows parse, malformed lines quarantine") {
@@ -76,15 +114,41 @@ class SourcesSpec extends AnyFunSuite {
     Files.writeString(java.nio.file.Path.of(dir, "b.csv"), "id\n2\n")
     val tracker = new FileTracker(spark, state)
     val first = tracker.newFiles(s"$dir/*.csv")
-    assert(first.count() == 2)
+    assert(first.size == 2)
     tracker.markProcessed(first, Map("a.csv" -> 1L, "b.csv" -> 1L))
-    assert(tracker.newFiles(s"$dir/*.csv").count() == 0) // all tracked
+    assert(tracker.newFiles(s"$dir/*.csv").isEmpty) // all tracked
     Files.writeString(java.nio.file.Path.of(dir, "a.csv"), "id\n1\n99\n")
-    val changed = tracker.newFiles(s"$dir/*.csv").collect()
-    assert(changed.map(_.getAs[String]("file_name")).toSeq == Seq("a.csv"))
+    val changed = tracker.newFiles(s"$dir/*.csv")
+    assert(changed.map(_.fileName) == Seq("a.csv"))
     tracker.markProcessed(tracker.newFiles(s"$dir/*.csv"), Map("a.csv" -> 2L))
-    assert(tracker.newFiles(s"$dir/*.csv").count() == 0)
+    assert(tracker.newFiles(s"$dir/*.csv").isEmpty)
     assert(tracker.state().count() == 2) // upsert by name, not append
+    // a fresh tracker reads the same persisted state
+    val again = new FileTracker(spark, state)
+    assert(again.newFiles(s"$dir/*.csv").isEmpty)
+    assert(again.state().collect().map(r =>
+      r.getAs[String]("file_name") -> r.getAs[Long]("record_count")).toMap ==
+      Map("a.csv" -> 2L, "b.csv" -> 1L))
+  }
+
+  test("FileTracker: a file rewritten between listing and markProcessed " +
+    "keeps the hash that was listed, so it stays pending") {
+    val dir = tmpDir(); val state = tmpDir() + "/state"
+    val a = java.nio.file.Path.of(dir, "a.csv")
+    Files.writeString(a, "id\n1\n")
+    val tracker = new FileTracker(spark, state)
+    val pending = tracker.newFiles(s"$dir/*.csv")
+    // the run reads the listed content, then the file is rewritten
+    // before the run records it
+    Files.writeString(a, "id\n1\n2\n")
+    tracker.markProcessed(pending, Map("a.csv" -> 1L))
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest("id\n1\n".getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(tracker.state().collect().map(_.getAs[String]("file_hash")).toSeq
+      == Seq(md5))
+    val next = new FileTracker(spark, state).newFiles(s"$dir/*.csv")
+    assert(next.map(_.fileName) == Seq("a.csv"),
+      "the rewritten content was never read and must stay pending")
   }
 
   private def rangeDf(start: Long, end: Long, slices: Int = 4) =

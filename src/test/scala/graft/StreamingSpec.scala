@@ -147,7 +147,7 @@ class StreamingSpec extends AnyFunSuite {
     val entity = BankEtl.schemas.find(_.name == "loans").get
     val dir = java.nio.file.Files.createTempDirectory("graft_etl_stream").toString
     java.nio.file.Files.copy(
-      java.nio.file.Path.of("/root/reference/data/loans.csv"),
+      java.nio.file.Path.of(graft.tools.RefFixture.dir, "loans.csv"),
       java.nio.file.Path.of(dir, "loans.csv"))
     // the same transform stage works batch OR streaming: the plan is
     // declarative, the source is the only difference

@@ -41,25 +41,29 @@ object ScaleFixture {
   }
 
   /** branches.csv — reference has 26 data rows; clean entity except
-    * planted empty-PK + keep-last shadow rows.
+    * planted empty-PK + keep-last shadow rows. `planted` rows (valid,
+    * distinct keys QT0001…) come first; generated ids start after them.
+    * The same holds for the other entities' writers.
     */
-  def writeBranches(path: Path, n: Int, dups: Int, emptyPk: Int): Stats = {
+  def writeBranches(path: Path, n: Int, dups: Int, emptyPk: Int,
+                    planted: Seq[Seq[String]] = Nil): Stats = {
+    val k = planted.size
     val rnd = new scala.util.Random(101)
     val cities = Seq("Mango", "Howrah", "Bhiwani", "Pune", "Salem")
     val states = Seq("Punjab", "Uttar Pradesh", "Kerala", "Bihar", "Goa")
     val base = (1 to n).iterator.map { i =>
-      Seq(f"QT$i%04d", s"Branch-$i", cities(rnd.nextInt(5)),
+      Seq(f"QT${i + k}%04d", s"Branch-$i", cities(rnd.nextInt(5)),
         states(rnd.nextInt(5)), s"Manager $i")
     }
     val shadows = (1 to dups).iterator.map { i =>
-      Seq(f"QT$i%04d", s"Branch-$i-LAST", "Pune", "Goa", s"Manager $i B")
+      Seq(f"QT${i + k}%04d", s"Branch-$i-LAST", "Pune", "Goa", s"Manager $i B")
     }
     val bad = (1 to emptyPk).iterator.map { i =>
       Seq(if (i % 2 == 0) "" else "  ", "Ghost", "X", "Y", "Z")
     }
     writeRows(path, "branch_id,branch_name,city,state,manager_name",
-      base ++ shadows ++ bad)
-    Stats(n.toLong + dups + emptyPk, emptyPk.toLong, dups.toLong)
+      planted.iterator ++ base ++ shadows ++ bad)
+    Stats(k.toLong + n + dups + emptyPk, emptyPk.toLong, dups.toLong)
   }
 
   /** customers.csv — dd-MM-yy dates (some invalid → transform nulls),
@@ -67,7 +71,8 @@ object ScaleFixture {
     * hazard the reference data carries), trimmed-PK rows.
     */
   def writeCustomers(path: Path, n: Int, nBranches: Int, dups: Int,
-                     emptyPk: Int): Stats = {
+                     emptyPk: Int, planted: Seq[Seq[String]] = Nil): Stats = {
+    val k = planted.size
     val rnd = new scala.util.Random(102)
     val genders = Seq("F", "M", "f", "m", "female", "MALE", "")
     val base = (1 to n).iterator.map { i =>
@@ -80,7 +85,7 @@ object ScaleFixture {
       // stage dedup keys on the RAW string (" 61 " ≠ "61"), so a
       // padded base row would NOT collapse with its shadow and the
       // by-construction count would drift (observed: +24 at 100x)
-      val id = if (i % 61 == 0 && i > dups) s" $i " else i.toString
+      val id = if (i % 61 == 0 && i > dups) s" ${i + k} " else (i + k).toString
       Seq(id, f"QT${1 + rnd.nextInt(nBranches)}%04d",
         s"First$i", s"last$i", dob, genders(rnd.nextInt(genders.size)),
         s"user$i@example.org", f"${7000000000L + i}%d",
@@ -88,7 +93,7 @@ object ScaleFixture {
         opened)
     }
     val shadows = (1 to dups).iterator.map { i =>
-      Seq(i.toString, "QT0001", s"First$i", s"LAST-SHADOW", "01-01-90",
+      Seq((i + k).toString, "QT0001", s"First$i", s"LAST-SHADOW", "01-01-90",
         "F", s"user$i@example.org", "7000000001",
         "1/1, Shadow Road, City-111111", "02-02-12")
     }
@@ -98,15 +103,16 @@ object ScaleFixture {
     }
     writeRows(path, "customer_id,branch_id,first_name,last_name,dob," +
       "gender,email,phone,address,account_open_date",
-      base ++ shadows ++ bad)
-    Stats(n.toLong + dups + emptyPk, emptyPk.toLong, dups.toLong)
+      planted.iterator ++ base ++ shadows ++ bad)
+    Stats(k.toLong + n + dups + emptyPk, emptyPk.toLong, dups.toLong)
   }
 
   /** loans.csv — currency-junk amounts (safe_num → 0), invalid dates,
     * status/type vocab of the reference data.
     */
   def writeLoans(path: Path, n: Int, nCustomers: Int, dups: Int,
-                 emptyPk: Int): Stats = {
+                 emptyPk: Int, planted: Seq[Seq[String]] = Nil): Stats = {
+    val k = planted.size
     val rnd = new scala.util.Random(103)
     val types = Seq("Home", "Car", "Personal", "Education", "Gold")
     val statuses = Seq("Closed", "Default", "Active")
@@ -118,14 +124,14 @@ object ScaleFixture {
       val start =
         if (i % 83 == 0) "31-04-15"
         else f"${1 + rnd.nextInt(28)}%02d-${1 + rnd.nextInt(12)}%02d-${10 + rnd.nextInt(12)}%02d"
-      Seq(i.toString, (1 + rnd.nextInt(nCustomers)).toString,
+      Seq((i + k).toString, (1 + rnd.nextInt(nCustomers)).toString,
         types(rnd.nextInt(types.size)), amt,
         f"${500 + rnd.nextInt(1200)}%d.${rnd.nextInt(100)}%02d".take(5),
         start, f"${1 + rnd.nextInt(28)}%02d-${1 + rnd.nextInt(12)}%02d-${22 + rnd.nextInt(10)}%02d",
         statuses(rnd.nextInt(statuses.size)))
     }
     val shadows = (1 to dups).iterator.map { i =>
-      Seq(i.toString, "1", "Home", "99999.99", "9.99", "01-01-20",
+      Seq((i + k).toString, "1", "Home", "99999.99", "9.99", "01-01-20",
         "01-01-28", "Active")
     }
     val bad = (1 to emptyPk).iterator.map { i =>
@@ -134,8 +140,8 @@ object ScaleFixture {
     }
     writeRows(path, "loan_id,customer_id,loan_type,loan_amount," +
       "interest_rate,start_date,end_date,loan_status",
-      base ++ shadows ++ bad)
-    Stats(n.toLong + dups + emptyPk, emptyPk.toLong, dups.toLong)
+      planted.iterator ++ base ++ shadows ++ bad)
+    Stats(k.toLong + n + dups + emptyPk, emptyPk.toLong, dups.toLong)
   }
 
   /** Write all four entities at `mult`× the reference's data volume
